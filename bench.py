@@ -13,6 +13,7 @@ flagship relational/dedup/similarity queries from __spark_entry__.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -22,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import exstruct_spark.pages  # noqa: E402
 from exstruct_spark.engine import default_session, extract_stage  # noqa: E402
 from exstruct_spark.pages import spark_pages  # noqa: E402
 from exstruct_spark.queries import QUERIES, RETIRED_QUERIES  # noqa: E402
@@ -111,13 +113,18 @@ def main() -> None:
     # 1. extraction throughput: generate the corpus once (excluded from the
     # measured window), then time the fused extraction stage alone
     pages = spark_pages(spark, n_docs, partitions=cpus * 2)
-    pages_path = f"/tmp/exstruct_bench_pages_{n_docs}"
+    # the cached corpus is keyed on everything that shapes it (size,
+    # partitioning, generator source), so a generator change never
+    # benchmarks a stale corpus
+    with open(exstruct_spark.pages.__file__, "rb") as fh:
+        gen_sha = hashlib.sha256(fh.read()).hexdigest()[:16]
+    pages_path = f"/tmp/exstruct_bench_pages_{n_docs}_p{cpus * 2}_{gen_sha}"
     if not os.path.exists(pages_path):
         pages.write.mode("overwrite").parquet(pages_path)
     pages_on_disk = spark.read.parquet(pages_path)
 
     # warm-up at the same partitioning: Python-worker spawn + JVM JIT are
-    # one-time costs, not throughput (same discipline as scaling_bench)
+    # one-time costs, not throughput
     extract_stage(pages_on_disk.limit(cpus * 64), repartition_to=cpus * 2).count()
 
     # throughput = best of 3 full passes.  Round-7 change (BENCH/BASELINE.md

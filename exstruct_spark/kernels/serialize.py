@@ -14,10 +14,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from itertools import islice
 from typing import Any
-
-_EMPTY = (None, "", [], {}, ())
 
 
 def strip_empty(value: Any) -> Any:
@@ -33,72 +30,54 @@ def strip_empty(value: Any) -> Any:
     # builtin cases, isinstance fallback so dict/list/str SUBCLASSES keep
     # the original semantics (recursed / dropped-when-empty) instead of
     # silently passing through; byte-identical output (unit + hypothesis
-    # fixpoint tests).  r8: LAZY copy — the original container object is
-    # returned unchanged when nothing inside it strips (the majority of
-    # extraction sub-dicts), so the walk allocates only where it edits.
-    # ``_SENTINEL_DROP`` marks a member to drop (None itself is dropped,
-    # so it doubles as the marker).
+    # fixpoint tests)
     if isinstance(value, dict):
-        out = None  # materialized on first edit
-        idx = 0
+        out = {}
         for k, v in value.items():
             tv = type(v)
             if tv is str:
-                nv = v if v else None
+                if v:
+                    out[k] = v
             elif tv is dict or tv is list or tv is tuple:
-                nv = strip_empty(v)
-                if not nv:
-                    nv = None
+                v = strip_empty(v)
+                if v:
+                    out[k] = v
             elif v is None:
-                nv = None
+                pass
             elif isinstance(v, (dict, list, tuple)):
-                nv = strip_empty(v)
-                if not nv:
-                    nv = None
+                v = strip_empty(v)
+                if v:
+                    out[k] = v
             elif isinstance(v, str):
-                nv = v if v else None
+                if v:
+                    out[k] = v
             else:
-                nv = v
-            if out is None:
-                if nv is v:
-                    idx += 1
-                    continue
-                # first edit: copy the unchanged prefix
-                out = dict(islice(value.items(), idx))
-            if nv is not None:
-                out[k] = nv
-        return value if out is None else out
+                out[k] = v
+        return out
     if isinstance(value, (list, tuple)):
-        out_l = None
-        if type(value) is not list:
-            out_l = []  # tuples always materialize as lists (parity)
-        idx = 0
+        out_l = []
+        add = out_l.append
         for v in value:
             tv = type(v)
             if tv is str:
-                nv = v if v else None
+                if v:
+                    add(v)
             elif tv is dict or tv is list or tv is tuple:
-                nv = strip_empty(v)
-                if not nv:
-                    nv = None
+                v = strip_empty(v)
+                if v:
+                    add(v)
             elif v is None:
-                nv = None
+                pass
             elif isinstance(v, (dict, list, tuple)):
-                nv = strip_empty(v)
-                if not nv:
-                    nv = None
+                v = strip_empty(v)
+                if v:
+                    add(v)
             elif isinstance(v, str):
-                nv = v if v else None
+                if v:
+                    add(v)
             else:
-                nv = v
-            if out_l is None:
-                if nv is v:
-                    idx += 1
-                    continue
-                out_l = list(value[:idx])
-            if nv is not None:
-                out_l.append(nv)
-        return value if out_l is None else out_l
+                add(v)
+        return out_l
     return value
 
 

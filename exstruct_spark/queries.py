@@ -377,26 +377,6 @@ GROUP BY l_returnflag
 """
 
 
-def q_docs_except_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-op coverage (SURVEY.md §2.6: exceptAll for fixture diffs):
-    doc_ids that exact-dedup would DROP = all ids EXCEPT first-seen ids."""
-    docs = _t(spark, sf_dir, "documents")
-    kept = (
-        docs.select("doc_id", F.md5(F.col("text").cast("binary")).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    return docs.select("doc_id").exceptAll(kept)
-
-
-SQL_DOCS_EXCEPT_KEPT = """
-SELECT doc_id FROM documents
-EXCEPT ALL
-SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-"""
-
-
 def q_events_rollup_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (SURVEY.md §2.4: the reference lacks these;
     Catalyst provides them natively for metric rollups)."""
@@ -1614,32 +1594,6 @@ FROM (
 """
 
 
-def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + LSH banding with a PORTABLE hash family: per-permutation
-    minhash = lexicographic min of md5('<seed>:' || shingle) hex strings
-    (fixed-length hex, so string min == numeric min), 4 bands of 4 hashed
-    with md5 again.  Same banded-bucket shape as ``dedup_minhash_lsh``
-    (whose xxhash64 is Spark-only) but computable verbatim in DuckDB —
-    this gives the MinHash kernel a full oracle row instead of rows-only.
-    Same lambda-binding discipline (CollapseProject guard)."""
-    docs = _t(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    bands = docs.select(
-        "doc_id", F.explode(F.expr(_MINHASH_MD5_BANDS_EXPR)).alias("band")
-    )
-    buckets = (
-        bands.select("doc_id", "band.band_idx", "band.band_hash")
-        .groupBy("band_idx", "band_hash")
-        .agg(F.count("*").alias("bucket_size"))
-    )
-    return buckets.groupBy("band_idx").agg(
-        F.count("*").alias("n_buckets"),
-        F.max("bucket_size").alias("max_bucket"),
-        F.sum(
-            F.col("bucket_size") * (F.col("bucket_size") - 1) / 2
-        ).cast("bigint").alias("candidate_pairs"),
-    )
-
-
 _SQL_MINHASH_MD5_BANDS_CTE = r"""
 WITH words AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
@@ -1662,18 +1616,6 @@ bands AS (
              mh[4*b.band_idx + 3] || '|' || mh[4*b.band_idx + 4]) AS band_hash
   FROM mh, (SELECT UNNEST(generate_series(0, 3)) AS band_idx) b)
 """
-
-SQL_DEDUP_MINHASH_MD5 = _SQL_MINHASH_MD5_BANDS_CTE + r""",
-buckets AS (
-  SELECT band_idx, band_hash, COUNT(*) AS bucket_size
-  FROM bands GROUP BY 1, 2)
-SELECT CAST(band_idx AS INTEGER) AS band_idx,
-       COUNT(*) AS n_buckets,
-       MAX(bucket_size) AS max_bucket,
-       CAST(SUM(bucket_size * (bucket_size - 1) / 2) AS BIGINT) AS candidate_pairs
-FROM buckets GROUP BY 1
-"""
-
 
 # --------------------------------------------------------------------------
 # LSH bucket-size guard (the quadratic hazard at corpus scale)
@@ -2022,26 +1964,6 @@ def _ann_bucket_sql(engine: str) -> str:
         # q_ann_ivf_topk rounds distances for the same reason)
         terms.append(f"(CASE WHEN round({dot}, 6) > 0 THEN {coef} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
-
-
-def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN scale path, bucket census: 8-bit sign-hyperplane
-    buckets from seeded Gaussian planes (the same matrix DuckDB recomputes
-    from identical literals — full oracle row).  At scale, neighbor search
-    joins within buckets (``ann_lsh_topk``) instead of a cross join."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return (
-        emb.select(F.expr(_ann_bucket_sql("spark")).cast("int").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_vectors"))
-    )
-
-
-SQL_ANN_LSH_BUCKETS_TEMPLATE = """
-SELECT CAST({bucket} AS INTEGER) AS bucket, COUNT(*) AS n_vectors
-FROM embeddings
-GROUP BY 1
-"""
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2600,11 +2522,6 @@ GROUP BY user_id
 """
 
 
-# round counts of the most recent CC runs (diagnostics for BENCH; the
-# convergence itself raises on failure, this is observability only)
-CC_ROUNDS: dict = {}
-
-
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS via LARGE-STAR/SMALL-STAR connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -2615,8 +2532,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     join feeds this operator.  FULL oracle check: DuckDB recomputes the
     components with a recursive transitive closure over brute-force
     edges (SQL_DEDUP_COMPONENTS below), value-hashed every correctness
-    run; pytest additionally cross-checks against union-find AND the
-    retained min-label implementation (``dedup_components_minlabel``).
+    run; pytest additionally cross-checks against union-find.
 
     Per round on canonical (u > v) edges:
       * large-star: for each node, hang its LARGER neighbors onto
@@ -2634,7 +2550,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     e_count = e.count()
-    for rounds in range(1, 31):
+    for _ in range(30):
         sym = e.select("u", "v").union(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -2671,7 +2587,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         e, e_count = small, small_count
         if converged:
-            CC_ROUNDS["star"] = rounds
             break
     else:
         raise RuntimeError(
@@ -2690,87 +2605,9 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The retained min-label + pointer-jumping CC loop (round-2 design),
-    kept as an oracle-checked second implementation: identical components
-    from independent iterative machinery (cross-checked against the
-    large-star/small-star primary in pytest and against the recursive-
-    closure oracle every correctness run)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = _neardup_pairs_lsh(emb, threshold=0.35).select("aid", "bid")
-    # undirected edge list both ways; localCheckpoint TRUNCATES LINEAGE —
-    # without it each iteration's plan embeds all previous ones and the
-    # driver OOMs on plan explosion (the canonical iterative-DataFrame bug)
-    edges = pairs.union(
-        pairs.select(F.col("bid").alias("aid"), F.col("aid").alias("bid"))
-    ).localCheckpoint()
-    labels = (
-        edges.select(F.col("aid").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    # plain min-label propagation is GRAPH-DIAMETER-bound (each round a
-    # node learns only its direct neighborhood's min).  Each round here
-    # adds a POINTER-JUMPING shortcut — label(u) := min(label(u),
-    # label(label(u))) — which halves label-chain lengths, so convergence
-    # is O(log diameter) rounds (the ADVICE-r1 fix; labels only ever
-    # decrease toward the component min, so the fixpoint is unchanged).
-    # Non-convergence still raises rather than silently splitting.
-    changed = 0
-    for rounds in range(1, 31):
-        neighbor_min = (
-            edges.join(labels, edges.bid == labels.node)
-            .groupBy("aid")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        stepped = labels.join(
-            neighbor_min, labels.node == neighbor_min.aid, "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-            ).alias("label"),
-        ).localCheckpoint()  # referenced twice below: materialize once
-        # shortcut: follow one's label to ITS label and take the min
-        parent = stepped.select(
-            F.col("node").alias("pnode"), F.col("label").alias("plabel")
-        )
-        new_labels = (
-            stepped.join(parent, stepped.label == parent.pnode, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("plabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            CC_ROUNDS["minlabel"] = rounds
-            break
-    if changed != 0:
-        raise RuntimeError(
-            "dedup_components: min-label propagation did not converge in 30 "
-            "rounds (similarity-chain diameter exceeds the bound) — raise "
-            "the round cap or switch to large-star/small-star"
-        )
-    return labels.groupBy("label").agg(
-        F.count("*").alias("component_size"),
-        F.min("node").alias("component_min_id"),
-    )
-
-
 # the oracle computes the SAME components with a recursive transitive
 # closure over the brute-force similarity edges — so both the LSH pair
-# generation AND the iterative min-label loop are value-checked against
+# generation AND the iterative star loop are value-checked against
 # exhaustive, independent machinery every correctness run (closure size is
 # sum of component sizes squared: fine at oracle scale, never run on the
 # corpus)
@@ -3085,16 +2922,6 @@ def q_extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = spark_pages(spark, _N_EXTRACT_DOCS, partitions=8)
     extracted = extract_stage(pages, repartition_to=8)
     return metrics_from_extracted(extracted, "driver-run").drop("wall_ms", "run_id")
-
-
-def q_extract_fallback_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = spark_pages(spark, _N_EXTRACT_DOCS, partitions=8)
-    extracted = extract_stage(pages, repartition_to=8)
-    return (
-        extracted.where(F.col("status") == "fallback")
-        .groupBy("fallback_reason")
-        .agg(F.count("*").alias("docs"))
-    )
 
 
 def q_extract_documents_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3612,12 +3439,9 @@ def q_media_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``queries()`` (VERDICT r3 "What's wrong" #1: round 3 had 56 entries and
 # the last six operators got no driver correctness row).  QUERIES is
 # therefore capped at exactly 50 entries — every operator the engine
-# claims is inside the driver's window.  Redundant twins moved to
-# RETIRED_QUERIES below: their implementations, DuckDB oracles and pytest
-# parity checks all remain (tests/test_oracle_parity.py runs QUERIES and
-# RETIRED_QUERIES identically), so no oracle COVERAGE is lost — the check
-# just runs in pytest instead of the driver.  A guard test pins
-# len(QUERIES) <= 50.
+# claims is inside the driver's window.  The few redundant twins still
+# needed live in RETIRED_QUERIES below, which tests/test_oracle_parity.py
+# runs exactly like QUERIES.  A guard test pins len(QUERIES) <= 50.
 
 QUERIES = {
     # relational / join / window core (oracle-backed)
@@ -3681,35 +3505,20 @@ QUERIES = {
 }
 
 # Consolidated out of the driver window (VERDICT r3 task #1).  Each is a
-# redundant twin of a QUERIES entry; pytest still runs its oracle parity
-# (or cross-check) every session:
-#   doc_langid                — subsumed by doc_langid_ngram (21-language
-#                               argmax; binary twin keeps its oracle here)
-#   dedup_minhash_lsh         — xxhash64 bucket twin; dedup_minhash_pairs
-#                               carries the end-to-end oracle
-#   dedup_simhash             — xxhash64 twin of dedup_simhash_md5
-#   dedup_minhash_md5         — bucket-level view subsumed by the
-#                               end-to-end dedup_minhash_pairs oracle
-#   dedup_components_minlabel — retained min-label CC, pinned equal to
-#                               dedup_components (star) in pytest
-#   extract_fallback_audit    — folded into the extraction pytest suite
-#                               (X3 fallback-not-fail adversarial probes)
-#   docs_except_kept          — 0-row exceptAll consistency audit; slot
-#                               yielded to doc_decontaminate (r4); oracle
-#                               parity still runs here every session
-#   ann_lsh_buckets           — bucket-stats view subsumed by
-#                               ann_lsh_topk's end-to-end oracle; slot
-#                               yielded to doc_substring_dedup (r4)
+# redundant twin of a QUERIES entry, kept for one reason only:
+#   dedup_ngram3      — its oracle counts toward the floor of 41 oracles
+#                       (tests/test_oracle_parity.py)
+#   doc_langid        — its oracle counts toward the floor of 41; binary
+#                       twin of doc_langid_ngram
+#   dedup_minhash_lsh — bench.py times it (xxhash64 bucket twin of
+#                       dedup_minhash_pairs)
+#   dedup_simhash     — bench.py times it (xxhash64 twin of
+#                       dedup_simhash_md5)
 RETIRED_QUERIES = {
     "dedup_ngram3": q_dedup_ngram3,
-    "docs_except_kept": q_docs_except_kept,
-    "ann_lsh_buckets": q_ann_lsh_buckets,
     "doc_langid": q_doc_langid,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "dedup_simhash": q_dedup_simhash,
-    "dedup_minhash_md5": q_dedup_minhash_md5,
-    "dedup_components_minlabel": q_dedup_components_minlabel,
-    "extract_fallback_audit": q_extract_fallback_audit,
 }
 
 ORACLES = {
@@ -3764,9 +3573,5 @@ ORACLES = {
 # runs these with the exact same compare as the driver rows)
 RETIRED_ORACLES = {
     "dedup_ngram3": SQL_DEDUP_NGRAM3,
-    "docs_except_kept": SQL_DOCS_EXCEPT_KEPT,
-    "ann_lsh_buckets": SQL_ANN_LSH_BUCKETS_TEMPLATE.format(bucket=_ann_bucket_sql("duckdb")),
     "doc_langid": SQL_DOC_LANGID,
-    "dedup_minhash_md5": SQL_DEDUP_MINHASH_MD5,
-    "dedup_components_minlabel": SQL_DEDUP_COMPONENTS,
 }

@@ -5554,3 +5554,23 @@ def test_parser_comment_open_inside_script_raw_text():
     assert p is not None and p.text_content() == "kept text"
     script = root.find_first("script")
     assert script.children == ["var x = 1 <!-- 2;"]
+
+
+def test_kernel_identity_digest_pinned():
+    """Byte-identity gate: ``scripts/kernel_identity.py`` hashes every
+    output field of ``extract_document`` over the first 2,000 bench pages.
+    A kernel edit that moves this digest must update the pin in the same
+    commit and give the reason in CHANGES.md."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "scripts", "kernel_identity.py"), "2000"],
+        capture_output=True, text=True, check=True, timeout=300,
+    ).stdout
+    assert out.split() == [
+        "docs=2000",
+        "digest=cabc29ef361b020f7e9903a3e6051d9d7bf2d4d1030f70e03595bc9b6cff6f78",
+    ]

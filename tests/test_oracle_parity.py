@@ -100,8 +100,7 @@ def test_rows_only_queries_run(spark, name):
     assert len(pdf) >= 0
     assert len(pdf.columns) > 0
     # rows-only queries should still return SOMETHING meaningful here
-    if name != "extract_fallback_audit":  # may legitimately be empty
-        assert len(pdf) > 0, f"{name} returned no rows"
+    assert len(pdf) > 0, f"{name} returned no rows"
 
 
 def test_driver_window_cap():
@@ -513,20 +512,6 @@ def test_ann_ivf_recall_at_3(spark):
         got = set(ivf[ivf["qid"] == qid]["cid"])
         recalls.append(len(b & got) / len(b))
     assert sum(recalls) / len(recalls) >= 0.3
-
-
-def test_cc_star_equals_minlabel(spark):
-    """VERDICT r2 #10 'Done' gate: large-star/small-star components are
-    IDENTICAL to the retained min-label+pointer-jumping loop (both also
-    carry the recursive-closure oracle row)."""
-    from exstruct_spark.queries import QUERIES
-
-    key = lambda pdf: sorted(
-        map(tuple, pdf[["label", "component_size", "component_min_id"]].values)
-    )
-    star = QUERIES["dedup_components"](spark, SF_DIR).toPandas()
-    minlabel = RETIRED_QUERIES["dedup_components_minlabel"](spark, SF_DIR).toPandas()
-    assert key(star) == key(minlabel)
 
 
 def test_host_pagerank_matches_pure_python(spark):

@@ -63,6 +63,74 @@ def test_strip_empty_idempotent_and_serializable(v):
     assert canonical_json(json.loads(s)) == s  # canonical fixpoint
 
 
+def _reference_strip(value):
+    """Plain recursive reference for ``strip_empty``: strip children first,
+    then drop every member that is None or an empty str/list/dict/tuple;
+    tuples come back as lists."""
+
+    def empty(v):
+        return v is None or (isinstance(v, (str, list, dict, tuple)) and not v)
+
+    if isinstance(value, dict):
+        out = {}
+        for k, v in value.items():
+            v = _reference_strip(v)
+            if not empty(v):
+                out[k] = v
+        return out
+    if isinstance(value, (list, tuple)):
+        stripped = (_reference_strip(v) for v in value)
+        return [v for v in stripped if not empty(v)]
+    return value
+
+
+_EMPTIES = st.sampled_from([None, "", [], {}, ()])
+
+
+def _edge_members(inner):
+    """Member lists with an empty value placed first, as the only member,
+    or last — the positions a copy-on-first-edit walk gets wrong."""
+    return st.tuples(
+        st.lists(inner, max_size=3), _EMPTIES, st.sampled_from(["first", "only", "last"])
+    ).map(lambda t: {"first": [t[1]] + t[0], "only": [t[1]], "last": t[0] + [t[1]]}[t[2]])
+
+
+def _containers(inner):
+    members = _edge_members(inner) | st.lists(inner, max_size=3)
+    return (
+        members
+        | members.map(tuple)
+        | members.map(lambda m: {f"k{i}": v for i, v in enumerate(m)})
+    )
+
+
+_TREES = st.recursive(
+    _EMPTIES
+    | st.booleans()
+    | st.integers(-2, 2)
+    | st.floats(allow_nan=False)
+    | st.text(max_size=3),
+    _containers,
+    max_leaves=25,
+)
+
+
+@given(_TREES)
+@settings(max_examples=300, deadline=None)
+def test_strip_empty_matches_reference(v):
+    expected = _reference_strip(v)
+    assert strip_empty(v) == expected
+    assert canonical_json(v) == json.dumps(
+        expected, ensure_ascii=False, separators=(",", ":")
+    )
+
+
+def test_strip_empty_drops_leading_none():
+    assert strip_empty({"a": None}) == {}
+    assert strip_empty([None, 1]) == [1]
+    assert canonical_json({"x": {"a": None}}) == "{}"
+
+
 def test_alpha_keys_option():
     html = (
         "<table><tr><th>h1</th><th>h2</th></tr>"

@@ -8,15 +8,25 @@ tables, shapes, charts, lists, links) is derived from the same tree
 Python UDF boundaries).
 
 No third-party HTML libraries are available in this environment
-(lxml/selectolax absent), so this is a small, robust, pure-stdlib tree
-builder: tolerant of unclosed tags, stray end tags, and void elements.
+(lxml/selectolax absent), so this is a small, robust tree builder:
+tolerant of unclosed tags, stray end tags, and void elements.  It runs
+as a C extension (``_dombuild.c``, compiled on import) with the pure
+Python builder below as its reference and fallback.
 Malformed input degrades (fallback-not-fail — reference
 core/pipeline.py:1097-1193) rather than raising.
 """
 
 from __future__ import annotations
 
+import hashlib
+import importlib.util
+import logging
+import os
 import re
+import shlex
+import subprocess
+import sysconfig
+import tempfile
 from html import unescape as _unescape
 from html.parser import HTMLParser
 from typing import Iterator, Optional
@@ -96,6 +106,8 @@ _IMPLICIT_CLOSE = {
     "tbody": {"tr", "td", "th", "thead"},
     "tfoot": {"tr", "td", "th", "tbody"},
 }
+# an implicit close never reaches past these open scopes
+_SCOPE_STOP = frozenset(("table", "ul", "ol", "div", "section", "body"))
 
 _WS_RE = re.compile(r"\s+")
 _NO_ATTRS: dict = {}  # shared empty attrs (never mutated)
@@ -353,7 +365,7 @@ class _TreeBuilder(HTMLParser):
                 if t in closers:
                     self._close_from(i)
                     break
-                if t in ("table", "ul", "ol", "div", "section", "body"):
+                if t in _SCOPE_STOP:
                     break
         node = self._new_node(tag, attrs)
         if tag not in VOID_ELEMENTS:
@@ -413,8 +425,9 @@ _TOKEN_RE = re.compile(
     # attrs: bulk-run the plain-char class, possessive outer star (same
     # language as the old single-char alternation — deterministic, so
     # possessiveness cannot change any match — with ~1.2x fewer engine
-    # steps and no backtracking state)
-    r"((?:[^>\"']+|\"[^\"]*\"|'[^']*')*+)(/?)>"               # attrs + self-close
+    # steps and no backtracking state).  A self-closing '/' is part of
+    # the attr run: the possessive star consumes it.
+    r"((?:[^>\"']+|\"[^\"]*\"|'[^']*')*+)>"                    # attrs
     r"|</([a-zA-Z][a-zA-Z0-9:-]*)[^>]*>"                      # end tag
     r"|<!--.*?(?:-->|$)"               # comments (unterminated -> EOF)
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"      # CDATA blocks
@@ -425,10 +438,10 @@ _ATTR_RE = re.compile(
     r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*(\"[^\"]*\"|'[^']*'|[^\s>]*))?"
 )
 _RAW_TEXT_TAGS = ("script", "style")
-# close-tag scan for raw-text elements: case-insensitive with a word
-# boundary (html.parser CDATA semantics) — '</SCRIPT>' must terminate the
-# span and '</scripty>' must NOT (a case-sensitive str.find does neither)
-_RAW_CLOSE_RE = {t: re.compile(rf"</{t}\b", re.I) for t in _RAW_TEXT_TAGS}
+# close-tag scan for raw-text elements: ASCII case-insensitive with a
+# (Unicode) word boundary, as the HTML tokenizer compares end-tag names —
+# '</SCRIPT>' must terminate the span, '</scripty>' and '</ſcript>' must NOT
+_RAW_CLOSE_RE = {t: re.compile(rf"</(?ai:{t})\b") for t in _RAW_TEXT_TAGS}
 
 
 # attr strings repeat heavily within and across pages (class=/href=
@@ -441,6 +454,16 @@ _ATTR_CACHE: dict = {}
 # is_raw_text): one dict probe replaces a lower() allocation plus three
 # set/dict lookups per start tag (r8).  Bounded like _ATTR_CACHE.
 _TAG_INFO: dict = {}
+
+
+def _tag_info(raw: str) -> tuple:
+    """``_TAG_INFO`` entry for a raw tag spelling, computed on a miss."""
+    tl = raw.lower()
+    info = (tl, _IMPLICIT_CLOSE.get(tl), tl in VOID_ELEMENTS,
+            tl in _RAW_TEXT_TAGS)
+    if len(_TAG_INFO) < 4096:
+        _TAG_INFO[raw] = info
+    return info
 
 
 def _parse_attrs(raw: str) -> dict:
@@ -475,13 +498,13 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
     add_node = doc_nodes.append
     root.doc_nodes = doc_nodes
     stack = [root]
-    lower = str.lower
     pos = 0
     n = len(html)
     unescape = _unescape
     new_node = Node.__new__  # slot-filled inline below (r8: bypassing
     # the Python-level __init__ call saves real time at ~60 nodes/doc)
     search = _TOKEN_RE.search
+    tag_info = _TAG_INFO.get
     # search-from-pos loop, NOT finditer: after a raw-text (script/
     # style) body is consumed the scan must RE-ANCHOR at the close tag
     # — a '<!--' inside the raw text would otherwise start a lazy
@@ -501,20 +524,14 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
                 text = unescape(text)
             stack[-1].children.append(text)
         pos = mend
-        # dispatch on lastindex: 3 = start tag (g3 '(/?)' always
-        # participates), 4 = end tag, None = comment/doctype token
+        # dispatch on lastindex: 2 = start tag (the attr group always
+        # participates), 3 = end tag, None = comment/doctype token
         last = m.lastindex
-        if last == 3:
-            start_tag, attr_raw, self_close = m.group(1, 2, 3)
+        if last == 2:
+            start_tag, attr_raw = m.group(1, 2)
             # one cache probe replaces lower() + implicit-close /
             # void / raw-text lookups (tag spellings repeat massively)
-            info = _TAG_INFO.get(start_tag)
-            if info is None:
-                tl = lower(start_tag)
-                info = (tl, _IMPLICIT_CLOSE.get(tl),
-                        tl in VOID_ELEMENTS, tl in _RAW_TEXT_TAGS)
-                if len(_TAG_INFO) < 4096:
-                    _TAG_INFO[start_tag] = info
+            info = tag_info(start_tag) or _tag_info(start_tag)
             tag, closers, is_void, is_raw = info
             if closers:
                 for i in range(len(stack) - 1, 0, -1):
@@ -525,7 +542,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
                             closed.i1 = end
                         del stack[i:]
                         break
-                    if t in ("table", "ul", "ol", "div", "section", "body"):
+                    if t in _SCOPE_STOP:
                         break
             node = new_node(Node)
             node.tag = tag
@@ -544,9 +561,9 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
             add_node(node)
             if xml_mode:
                 # XML: '<x .../>'' self-closes anything; no void list
-                if self_close or attr_raw.rstrip().endswith("/"):
+                if attr_raw.rstrip().endswith("/"):
                     continue
-            elif self_close or is_void:
+            elif is_void:
                 continue
             if is_raw:
                 # raw text until the matching close tag (html.parser CDATA
@@ -563,15 +580,9 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
                     pos = n if gt == -1 else gt + 1
                 continue
             stack.append(node)
-        elif last == 4:
-            end_raw = m.group(4)
-            info = _TAG_INFO.get(end_raw)
-            if info is None:
-                tl = lower(end_raw)
-                info = (tl, _IMPLICIT_CLOSE.get(tl),
-                        tl in VOID_ELEMENTS, tl in _RAW_TEXT_TAGS)
-                if len(_TAG_INFO) < 4096:
-                    _TAG_INFO[end_raw] = info
+        elif last == 3:
+            end_raw = m.group(3)
+            info = tag_info(end_raw) or _tag_info(end_raw)
             tag = info[0]
             if info[2] and not xml_mode:  # void end tag: ignored
                 continue
@@ -596,13 +607,67 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
     return root
 
 
+# -- native tree builder -----------------------------------------------------
+# _dombuild.c builds the same tree as _parse_html_fast in one C call; the
+# Python loop above stays as its reference and as the fallback.  It is
+# compiled on import with the interpreter's own compiler and headers into
+# _build/, under a name keyed on the source and the ABI, so a checkout
+# compiles it once and a changed source never loads a stale build.
+
+
+def _load_native():
+    """Compile ``_dombuild.c`` unless already built, import it and hand it
+    this module's tables and caches.  Returns its ``build`` function."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    src = os.path.join(here, "_dombuild.c")
+    with open(src, "rb") as f:
+        code = f.read()
+    suffix = sysconfig.get_config_var("EXT_SUFFIX")
+    key = hashlib.sha256(code + suffix.encode()).hexdigest()[:16]
+    out_dir = os.path.join(here, "_build")
+    path = os.path.join(out_dir, f"_dombuild_{key}{suffix}")
+    if not os.path.exists(path):
+        os.makedirs(out_dir, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=out_dir)
+        os.close(fd)
+        try:
+            cc = shlex.split(sysconfig.get_config_var("CC"))
+            subprocess.run(
+                [*cc, "-O2", "-fPIC", "-shared",
+                 "-I", sysconfig.get_paths()["include"], src, "-o", tmp],
+                check=True, capture_output=True, text=True, timeout=300)
+            # atomic rename: a concurrent importer sees no file or a whole one
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+    spec = importlib.util.spec_from_file_location("_dombuild", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    mod.configure(Node, _NO_ATTRS, "#document", _SCOPE_STOP, _TAG_INFO,
+                  _tag_info, _ATTR_CACHE, _parse_attrs, _unescape)
+    return mod.build
+
+
+try:
+    _native_build = _load_native()
+except Exception as exc:  # no compiler, read-only checkout, ...: keep parsing
+    logging.getLogger(__name__).warning(
+        "native tree builder unavailable, using the Python parser: %r %s",
+        exc, getattr(exc, "stderr", "") or "")
+    _native_build = None
+# which tree builder parse_html uses in this process: "native" or "python"
+PARSER = "python" if _native_build is None else "native"
+_build_tree = _native_build or _parse_html_fast
+
+
 def parse_html(html: str, xml_mode: bool = False) -> Node:
     """Parse an HTML string into a ``Node`` tree.  Never raises on
     malformed markup; truly unparseable input yields an (almost) empty
     ``#document`` the caller treats as the fallback path.  ``xml_mode``
     applies XML self-closing/void semantics (the feed route)."""
     try:
-        return _parse_html_fast(html, xml_mode)
+        return _build_tree(html, xml_mode)
     except Exception:
         return parse_html_stdlib(html)
 

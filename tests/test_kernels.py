@@ -694,6 +694,18 @@ def test_scripty_tag_does_not_terminate_script():
     assert "</scripty>" in "".join(c for c in script.children if isinstance(c, str))
 
 
+@pytest.mark.parametrize("tag,close", [
+    ("script", "</ſcript>"), ("script", "</scrİpt>"), ("script", "</scrıpt>"),
+    ("style", "</ſtyle>"),
+])
+def test_unicode_case_fold_does_not_terminate_raw_text(tag, close):
+    # end-tag names compare ASCII-case-insensitively, as in the HTML
+    # tokenizer: a Unicode case fold ('ſ' ~ 's', 'İ'/'ı' ~ 'i') is no close
+    root = parse_html(f"<{tag}>a {close} b</{tag}><p>after</p>")
+    assert root.text_content() == "after"
+    assert root.find_first(tag).children == [f"a {close} b"]
+
+
 # --- round 2: color normalization (F1) + colors_map (A1 parity)
 def test_normalize_color():
     from exstruct_spark.kernels.colors import normalize_color
@@ -5554,6 +5566,96 @@ def test_parser_comment_open_inside_script_raw_text():
     assert p is not None and p.text_content() == "kept text"
     script = root.find_first("script")
     assert script.children == ["var x = 1 <!-- 2;"]
+
+
+def test_native_tree_builder_loaded():
+    """The C tree builder built and loaded: a broken build must fail the
+    suite, not fall back quietly to the slower Python builder."""
+    from exstruct_spark.kernels import dom
+
+    assert dom.PARSER == "native"
+    assert dom._build_tree is dom._native_build
+
+
+def test_native_tree_builder_does_not_leak():
+    """Repeated parses hold no memory: a reference the C builder fails to
+    release would grow the traced heap by megabytes over 20k parses."""
+    import gc
+    import tracemalloc
+
+    from exstruct_spark.kernels import dom
+    from exstruct_spark.pages import build_page
+
+    htmls = [build_page(i)["html"].decode("utf-8") for i in range(100)]
+    for html in htmls:  # fill the tag-info and attr caches first
+        dom._native_build(html, False)
+    gc.collect()
+    tracemalloc.start()
+    try:
+        before = tracemalloc.get_traced_memory()[0]
+        for _ in range(200):
+            for html in htmls:
+                dom._native_build(html, False)
+        gc.collect()
+        grown = tracemalloc.get_traced_memory()[0] - before
+    finally:
+        tracemalloc.stop()
+    assert grown < 256 * 1024, grown
+
+
+def _import_dom_copies(tmp_path, files, n_procs):
+    """Import a copy of dom.py (plus ``files`` beside it) in ``n_procs``
+    processes that start the import at the same moment; returns each
+    process's (returncode, stdout, stderr)."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import time
+
+    from exstruct_spark.kernels import dom
+
+    here = os.path.dirname(dom.__file__)
+    for name in ("dom.py", *files):
+        shutil.copy(os.path.join(here, name), tmp_path / name)
+    start = time.time() + 3.0
+    code = (
+        "import sys, time\n"
+        f"sys.path.insert(0, {str(tmp_path)!r})\n"
+        f"time.sleep(max(0.0, {start!r} - time.time()))\n"
+        "import dom\n"
+        "root = dom.parse_html('<ul><li>a<li>b &amp; c</ul><br/>')\n"
+        "print(dom.PARSER, [(n.tag, n.i0, n.i1) for n in root.iter()],"
+        " root.text_content())\n"
+    )
+    procs = [subprocess.Popen([sys.executable, "-c", code], text=True,
+                              stdout=subprocess.PIPE, stderr=subprocess.PIPE)
+             for _ in range(n_procs)]
+    outs = [p.communicate(timeout=300) for p in procs]
+    return [(p.returncode, out, err) for p, (out, err) in zip(procs, outs)]
+
+
+_DOM_COPY_OUT = ("[('#document', 0, 5), ('ul', 1, 4), ('li', 2, 3), "
+                 "('li', 3, 4), ('br', 4, 5)] a b & c")
+
+
+def test_native_build_concurrent_first_import(tmp_path):
+    """Four processes import dom at once against an empty build directory:
+    each compiles to its own temp file and renames it into place, so all
+    load a whole, working extension and no temp file is left behind."""
+    results = _import_dom_copies(tmp_path, ["_dombuild.c"], 4)
+    for rc, out, err in results:
+        assert (rc, out.strip(), err) == (0, "native " + _DOM_COPY_OUT, "")
+    built = [p.name for p in (tmp_path / "_build").iterdir()]
+    assert len(built) == 1 and built[0].startswith("_dombuild_"), built
+
+
+def test_native_build_failure_falls_back_to_python(tmp_path):
+    """Without the C source the build fails: dom logs one warning and
+    parses with the Python builder, to the same tree."""
+    ((rc, out, err),) = _import_dom_copies(tmp_path, [], 1)
+    assert (rc, out.strip()) == (0, "python " + _DOM_COPY_OUT)
+    assert err.count("native tree builder unavailable") == 1, err
 
 
 def test_kernel_identity_digest_pinned():

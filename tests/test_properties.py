@@ -5,11 +5,12 @@ tests only, SURVEY.md §5 'Not used: property-based testing' — we add it.)"""
 
 import json
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from exstruct_spark.config import ExtractOptions
 from exstruct_spark.kernels.coerce import coerce_scalar
+from exstruct_spark.kernels import dom
 from exstruct_spark.kernels.dom import decode_html_bytes, parse_html, strip_tags_text
 from exstruct_spark.kernels.extract import extract_document
 from exstruct_spark.kernels.serialize import canonical_json, strip_empty
@@ -43,6 +44,70 @@ def test_dom_total(s):
     root.text_content()
     strip_tags_text(s)
     decode_html_bytes(s.encode("utf-8", errors="ignore"))
+
+
+def _tree_shape(root):
+    """Every node in document order as (is a Node, tag, attrs, i0, i1,
+    parent index, children with text, shares doc_nodes): equal shapes are
+    equal trees."""
+    nodes = root.doc_nodes
+    index = {id(n): i for i, n in enumerate(nodes)}
+    return [
+        (type(n) is dom.Node, n.tag, n.attrs, n.i0, n.i1,
+         None if n.parent is None else index[id(n.parent)],
+         [c if type(c) is str else index[id(c)] for c in n.children],
+         n.doc_nodes is nodes)
+        for n in nodes
+    ]
+
+
+def _assert_native_matches_python(html):
+    for xml_mode in (False, True):
+        assert (_tree_shape(dom._native_build(html, xml_mode))
+                == _tree_shape(dom._parse_html_fast(html, xml_mode))), xml_mode
+
+
+# tag soup fragments: unclosed quotes, stray '<', '</ >', unterminated
+# comments/CDATA (also before a final newline: the regex '$'), '<!--' in
+# script bodies, implicit closes, void/self-closing tags, entities,
+# non-ASCII text, and Unicode case folds that must not close raw text
+_SOUP = st.lists(
+    st.sampled_from([
+        "<", ">", "</", "</ >", "<!--", "-->", "<!--\n", "<![CDATA[", "]]>",
+        "<!", "<!doctype html>", "<?", "<?xml x?>", '"', "'", "=", "/", " ",
+        "\n", "\t", "x", "é", "😀", "　", "&amp;", "&", "&lt;b", "<a",
+        "<A href='x>y'>", '<div class="a">', "</div>", "<p>", "</P>", "<p /",
+        "<li>", "<Li>", "</LI>", "<ul>", "</ul>", "<table>", "</table>",
+        "<tr>", "<td>", "<th>", "<tbody>", "<thead>", "<tfoot>", "<option>",
+        "<dd>", "<dt>", "<br>", "<br/>", "</br>", "<x/>", "<P\t/>", "<link>",
+        "</link>", "<a-b:c d=e>", "<script>", "</script>", "</SCRIPT >",
+        "</scripty>", "</script_>", "</ſcript>", "</scrİpt>", "</scrıpt>",
+        "<style>", "</style>", "</ſtyle>",
+    ]) | st.text(max_size=4),
+    max_size=40,
+).map("".join)
+
+
+@given(_SOUP)
+@example("<script>a</script_>b</scriptß>c</SCRIPT>d")
+@example("<style>a</ſtyle>b</style>c<script>d</scrİpt>e")
+@example("<script>a<!--b</script>c-->d<!--e\n")
+@example("<p>a<![CDATA[b\n")
+@settings(max_examples=400, deadline=None)
+def test_native_tree_matches_python_fuzz(html):
+    """The C tree builder equals the Python reference on tag soup, in
+    HTML and XML mode."""
+    _assert_native_matches_python(html)
+
+
+def test_native_tree_matches_python_corpus():
+    from exstruct_spark.pages import build_page, build_rich_page
+
+    for i in range(2000):
+        _assert_native_matches_python(build_page(i)["html"].decode("utf-8"))
+    for i in range(500):
+        _assert_native_matches_python(
+            build_rich_page(i)["html"].decode("utf-8"))
 
 
 _JSONish = st.recursive(

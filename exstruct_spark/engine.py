@@ -185,30 +185,17 @@ def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
     @pandas_udf("array<string>")
     def _resolve_candidates(page_url: pd.Series, bt_stripped: pd.Series,
                             bt_noscript: pd.Series, bt_raw: pd.Series,
-                            link_tag: pd.Series) -> pd.Series:
+                            ref: pd.Series, ref_is_tag: pd.Series
+                            ) -> pd.Series:
+        # ref: a whole <link> tag (href read by the kernel attr parser),
+        # or a style-block @import target, which is raw CSS text — NO
+        # entity decoding (the DOM stores raw-text content verbatim)
         out = []
-        for u, b1, b2, b3, tag in zip(page_url, bt_stripped,
-                                      bt_noscript, bt_raw, link_tag):
-            h = (_attrs_of_tag(tag).get("href") or "").strip()
-            if not h:
-                out.append(None)
-                continue
-            out.append(_candidate_urls(
-                u, (_first_base_href(b1), _first_base_href(b2),
-                    _first_base_href(b3)), h))
-        return pd.Series(out, dtype=object)
-
-    @pandas_udf("array<string>")
-    def _resolve_import_candidates(
-            page_url: pd.Series, bt_stripped: pd.Series,
-            bt_noscript: pd.Series, bt_raw: pd.Series,
-            href: pd.Series) -> pd.Series:
-        # style-block @import targets are raw CSS text — NO entity
-        # decoding (the DOM stores raw-text content verbatim)
-        out = []
-        for u, b1, b2, b3, h in zip(page_url, bt_stripped,
-                                    bt_noscript, bt_raw, href):
-            h = (h or "").strip()
+        for u, b1, b2, b3, r, is_tag in zip(page_url, bt_stripped,
+                                            bt_noscript, bt_raw, ref,
+                                            ref_is_tag):
+            h = ((_attrs_of_tag(r).get("href") if is_tag else r)
+                 or "").strip()
             if not h:
                 out.append(None)
                 continue
@@ -243,8 +230,7 @@ def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
         return F.slice(
             F.regexp_extract_all(col, F.lit(_BASE_TAG_RE), 0), 1, 8)
 
-    tags = pages.select(
-        "url",
+    base_cols = (
         _base_tags(
             F.regexp_replace(html_s, _comment_re, "")
         ).alias("bt_stripped"),
@@ -254,6 +240,11 @@ def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
                 _comment_re, "")
         ).alias("bt_noscript"),
         _base_tags(html_s).alias("bt_raw"),
+    )
+    bt_names = ("bt_stripped", "bt_noscript", "bt_raw")
+    tags = pages.select(
+        "url",
+        *base_cols,
         F.posexplode(
             F.regexp_extract_all(html_s, F.lit(_LINK_TAG_RE), 0)
         ).alias("link_order", "tag"),
@@ -266,18 +257,9 @@ def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
     # _stylesheet_refs (real attribute parse + media_applies_on_screen)
     # is the single authority — extract_document applies a joined sheet
     # only when its URL is on that authoritative list.
-    refs = (
-        tags.where(F.col("tag").rlike(_REL_STYLESHEET_RE))
-        .select(
-            "url", "link_order",
-            F.explode(
-                _resolve_candidates(
-                    "url", "bt_stripped", "bt_noscript",
-                    "bt_raw", "tag")
-            ).alias("css_url"),
-        )
-        .where(F.col("css_url").isNotNull())
-    )
+    link_refs = tags.where(F.col("tag").rlike(_REL_STYLESHEET_RE)).select(
+        "url", "link_order", *bt_names, F.col("tag").alias("ref"),
+        F.lit(True).alias("ref_is_tag"))
     # inline <style> @import targets (the legacy-theme idiom): style
     # BLOCKS captured with the raw-text close rule (</style\b, like
     # dom._RAW_CLOSE_RE), their @import hrefs harvested permissively
@@ -290,15 +272,7 @@ def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
     style_imports = (
         pages.select(
             "url",
-            _base_tags(
-                F.regexp_replace(html_s, _comment_re, "")
-            ).alias("bt_stripped"),
-            _base_tags(
-                F.regexp_replace(
-                    F.regexp_replace(html_s, _rawtext_re, ""),
-                    _comment_re, "")
-            ).alias("bt_noscript"),
-            _base_tags(html_s).alias("bt_raw"),
+            *base_cols,
             F.posexplode(
                 F.slice(
                     F.regexp_extract_all(
@@ -307,7 +281,7 @@ def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
             ).alias("style_pos", "block"),
         )
         .select(
-            "url", "bt_stripped", "bt_noscript", "bt_raw", "style_pos",
+            "url", *bt_names, "style_pos",
             F.posexplode(
                 F.slice(
                     F.regexp_extract_all(
@@ -320,15 +294,20 @@ def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
             "url",
             (F.lit(100_000) + F.col("style_pos") * 100
              + F.col("imp_pos")).alias("link_order"),
+            *bt_names, F.col("imp_href").alias("ref"),
+            F.lit(False).alias("ref_is_tag"),
+        )
+    )
+    refs = (
+        link_refs.unionByName(style_imports)
+        .select(
+            "url", "link_order",
             F.explode(
-                _resolve_import_candidates(
-                    "url", "bt_stripped", "bt_noscript",
-                    "bt_raw", "imp_href")
+                _resolve_candidates("url", *bt_names, "ref", "ref_is_tag")
             ).alias("css_url"),
         )
         .where(F.col("css_url").isNotNull())
     )
-    refs = refs.unionByName(style_imports)
     # same sheet linked twice: keep the first position (kernel parity)
     return refs.groupBy("url", "css_url").agg(
         F.min("link_order").alias("link_order")
@@ -338,7 +317,6 @@ def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
 def attach_external_css(
     pages: DataFrame,
     css_docs: Optional[DataFrame] = None,
-    broadcast_css: bool = True,
 ) -> DataFrame:
     """pages (url, html, ...) -> same + ``external_css
     array<struct<u: string, t: string>>`` — per entry the LINK's
@@ -347,10 +325,8 @@ def attach_external_css(
 
     ``css_docs``: the corpus's stylesheet documents as (url, html) — by
     default derived from ``pages`` itself by url shape (``*.css``).
-    ``broadcast_css``: hint that the distinct stylesheet side fits in
-    memory (true on any real crawl slice — sheets are a small fraction
-    of pages and heavily shared); pass False to let AQE pick the
-    strategy for a css-heavy corpus.
+    The stylesheet side is broadcast: on a crawl slice sheets are a
+    small fraction of pages and heavily shared.
     """
     import pandas as pd  # noqa: F811 (kernel import pattern)
     from pyspark.sql.functions import pandas_udf
@@ -362,7 +338,7 @@ def attach_external_css(
         F.col("url").alias("css_url"),
         F.col("html").cast("string").alias("css_text"),
     )
-    right = F.broadcast(sheets) if broadcast_css else sheets
+    right = F.broadcast(sheets)
     joined = (refs.join(right, "css_url", "inner")
               .withColumn("link_url", F.col("css_url")))
 
@@ -442,7 +418,6 @@ def extract_stage(
     opts: ExtractOptions = ExtractOptions(),
     repartition_to: Optional[int] = None,
     passthrough: tuple = (),
-    use_external_css: bool = False,
 ) -> DataFrame:
     """The fused extraction transform: pages df -> extraction df.
 
@@ -457,9 +432,9 @@ def extract_stage(
     downstream re-join on url to recover these is a full extra shuffle —
     carrying them through the same batch is free.
 
-    ``use_external_css``: the input carries an ``external_css`` column
-    (from ``attach_external_css``) — ride it into the batch so the
-    kernel's StyleResolver sees corpus-joined stylesheet rules.
+    An ``external_css`` input column (from ``attach_external_css``)
+    rides into the batch, so the kernel's StyleResolver sees the
+    corpus-joined stylesheet rules.
     """
     df = pages
     if repartition_to:
@@ -495,7 +470,8 @@ def extract_stage(
                 out[col] = pdf[col].values
             yield out
 
-    extra_in = ("external_css",) if use_external_css else ()
+    extra_in = (("external_css",) if "external_css" in pages.columns
+                else ())
     return df.select("url", "html", *extra_in, *passthrough).mapInPandas(
         run, schema=EXTRACT_WITH_PARTITION_DDL + pass_ddl
     )
@@ -695,12 +671,31 @@ class ExtractionJob:
         fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs, hpath
 
+    def _with_bucket(self, df: DataFrame) -> DataFrame:
+        """``df`` plus its url-hash bucket: the one key of staging, waves,
+        resume and patch."""
+        return df.withColumn(
+            "url_bucket",
+            F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int"))
+
     def _staged_path(self, input_snapshot: str) -> str:
         # snapshot names may be paths/URIs ("iceberg:db.tbl", "s3://...");
         # percent-encode for the directory name like partitionBy would
         from urllib.parse import quote
 
         return f"{self.staging_dir}/snapshot={quote(input_snapshot, safe='')}"
+
+    def _completed_staging(self, input_snapshot: str, what: str) -> str:
+        """The snapshot's staged path; raises unless its staging is
+        complete (``_SUCCESS`` present)."""
+        staged_path = self._staged_path(input_snapshot)
+        fs, hpath = self._fs(staged_path + "/_SUCCESS")
+        if not fs.exists(hpath):
+            raise ValueError(
+                f"no completed staging for snapshot {input_snapshot!r} — "
+                f"{what} requires a prior run(stage_input=True)"
+            )
+        return staged_path
 
     def _output_schema_ddl(self) -> str:
         return (
@@ -717,10 +712,8 @@ class ExtractionJob:
         fs, hpath = self._fs(staged + "/_SUCCESS")
         if fs.exists(hpath):
             return staged
-        bucketed = pages.withColumn(
-            "url_bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
-        )
-        bucketed.write.mode("overwrite").partitionBy("url_bucket").parquet(staged)
+        (self._with_bucket(pages).write.mode("overwrite")
+         .partitionBy("url_bucket").parquet(staged))
         return staged
 
     def _list_staged_buckets(self, staged: str) -> list:
@@ -776,11 +769,10 @@ class ExtractionJob:
         # re-hash, no re-join to recover the sink partition key.
         # A staged external_css column (attach_external_css ran on the
         # full corpus BEFORE staging — the join must see page and sheet
-        # regardless of bucket) is auto-detected and ridden in; patch
+        # regardless of bucket) rides in via extract_stage; patch
         # refreshes reuse the staged sheets unchanged.
         extracted = extract_stage(
-            todo, self.opts, passthrough=("url_bucket",),
-            use_external_css="external_css" in staged.columns,
+            todo, self.opts, passthrough=("url_bucket",)
         ).withColumn("input_snapshot", F.lit(input_snapshot))
         self.io.write(
             extracted, self.output_dir, "overwrite",
@@ -842,10 +834,7 @@ class ExtractionJob:
             staged = self.spark.read.parquet(staged_path)
             present = self._list_staged_buckets(staged_path)
         else:
-            staged = pages.withColumn(
-                "url_bucket",
-                F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int"),
-            )
+            staged = self._with_bucket(pages)
             present = list(range(self.n_buckets))
         done_set = self._done_buckets(input_snapshot)
         todo_buckets = [b for b in present if b not in done_set]
@@ -908,18 +897,9 @@ class ExtractionJob:
         size ``n_buckets`` for the patch regime (4096+ at corpus scale
         keeps a few-thousand-url patch under a percent of the data;
         measured 4.6x at 96k docs / 64 buckets, BENCH round-4)."""
-        staged_path = self._staged_path(input_snapshot)
-        fs, hpath = self._fs(staged_path + "/_SUCCESS")
-        if not fs.exists(hpath):
-            raise ValueError(
-                f"no completed staging for snapshot {input_snapshot!r} — "
-                "patch requires a prior run(stage_input=True)"
-            )
+        staged_path = self._completed_staging(input_snapshot, "patch")
         run_id = uuid.uuid4().hex[:12]
-        bucketed = patch.withColumn(
-            "url_bucket",
-            F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int"),
-        )
+        bucketed = self._with_bucket(patch)
         affected = sorted(
             r["url_bucket"]
             for r in bucketed.select("url_bucket").distinct().collect()
@@ -932,19 +912,8 @@ class ExtractionJob:
             .unionByName(bucketed)
             .localCheckpoint()
         )
-        conf = self.spark.conf
-        key = "spark.sql.sources.partitionOverwriteMode"
-        old = conf.get(key, None)
-        conf.set(key, "dynamic")
-        try:
-            (merged.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("url_bucket").parquet(staged_path))
-        finally:
-            if old is None:
-                conf.unset(key)
-            else:
-                conf.set(key, old)
+        TableIO().write(merged, staged_path, "overwrite",
+                        partition_by=("url_bucket",), dynamic=True)
         fresh = self.spark.read.parquet(staged_path)
         self._run_wave(fresh, affected, run_id, input_snapshot)
         return {
@@ -984,13 +953,7 @@ class ExtractionJob:
         from exstruct_spark.kernels.dom import decode_html_bytes
         from exstruct_spark.kernels.edits import apply_ops
 
-        staged_path = self._staged_path(input_snapshot)
-        fs, hpath = self._fs(staged_path + "/_SUCCESS")
-        if not fs.exists(hpath):
-            raise ValueError(
-                f"no completed staging for snapshot {input_snapshot!r} — "
-                "cell edits require a prior run(stage_input=True)"
-            )
+        staged_path = self._completed_staging(input_snapshot, "cell edits")
         urls = sorted(edits)
         ops_json = {u: _json.dumps(list(ops)) for u, ops in edits.items()}
         bc = self.spark.sparkContext.broadcast(ops_json)

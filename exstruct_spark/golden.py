@@ -13,30 +13,13 @@ import pandas as pd
 from exstruct_spark.config import ExtractOptions
 from exstruct_spark.kernels.extract import extract_document
 
-GOLDEN_COLUMNS = [
-    "url",
-    "status",
-    "fallback_reason",
-    "main_text",
-    "extraction_json",
-    "text_sha256",
-    "json_sha256",
-    "n_tables",
-    "n_shapes",
-    "n_arrows",
-    "n_charts",
-    "n_lists",
-    "n_links",
-    "bytes_in",
-    "truncated",
-]
-
 EXTRACT_SCHEMA_DDL = (
     "url string, status string, fallback_reason string, main_text string, "
     "extraction_json string, text_sha256 string, json_sha256 string, "
     "n_tables int, n_shapes int, n_arrows int, n_charts int, n_lists int, "
     "n_links int, bytes_in bigint, truncated boolean"
 )
+GOLDEN_COLUMNS = [f.split()[0] for f in EXTRACT_SCHEMA_DDL.split(", ")]
 
 
 def extract_pdf(pdf: pd.DataFrame, opts: ExtractOptions = ExtractOptions()) -> pd.DataFrame:
@@ -45,22 +28,16 @@ def extract_pdf(pdf: pd.DataFrame, opts: ExtractOptions = ExtractOptions()) -> p
     This exact function body runs inside the Spark ``mapInPandas`` stage;
     calling it directly on a pandas frame is the reference extractor.
     """
-    if "external_css" in pdf.columns:
-        # corpus-joined stylesheet texts (engine.attach_external_css):
-        # per-row list of sheet strings in link order, None when the
-        # page linked no sheet present in the corpus
-        records = [
-            extract_document(url, html, opts, external_css=ext)
-            for url, html, ext in zip(
-                pdf["url"].tolist(), pdf["html"].tolist(),
-                pdf["external_css"].tolist(),
-            )
-        ]
-    else:
-        records = [
-            extract_document(url, html, opts)
-            for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist())
-        ]
+    # corpus-joined stylesheet texts (engine.attach_external_css): per-row
+    # list of sheet strings in link order, None when the page linked no
+    # sheet present in the corpus
+    ext_css = (pdf["external_css"].tolist() if "external_css" in pdf.columns
+               else [None] * len(pdf))
+    records = [
+        extract_document(url, html, opts, external_css=ext)
+        for url, html, ext in zip(pdf["url"].tolist(), pdf["html"].tolist(),
+                                  ext_css)
+    ]
     return pd.DataFrame(records, columns=GOLDEN_COLUMNS)
 
 

@@ -1,4 +1,4 @@
-"""Lightweight DOM on top of stdlib ``html.parser``.
+"""Lightweight DOM: a tolerant HTML tree builder and its ``Node`` tree.
 
 The web analogue of the reference's single-pass OOXML scan
 (``core/ooxml_drawing.py:186-257``, streaming ``iterparse`` with bounded
@@ -12,8 +12,9 @@ No third-party HTML libraries are available in this environment
 tolerant of unclosed tags, stray end tags, and void elements.  It runs
 as a C extension (``_dombuild.c``, compiled on import) with the pure
 Python builder below as its reference and fallback.
-Malformed input degrades (fallback-not-fail — reference
-core/pipeline.py:1097-1193) rather than raising.
+Malformed markup still yields a tree; an error inside the builder
+propagates to ``extract_document``, which records the document as a
+fallback (fallback-not-fail — reference core/pipeline.py:1097-1193).
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ import subprocess
 import sysconfig
 import tempfile
 from html import unescape as _unescape
-from html.parser import HTMLParser
 from typing import Iterator, Optional
 
 VOID_ELEMENTS = frozenset(
@@ -124,8 +124,8 @@ class Node:
     creation, ``i1`` when the element scope closes.  Subtree traversal of
     a parsed document is then one C-level list slice — no per-node Python
     walk.  The tree is never mutated after parse (all kernels are
-    read-only over it), so the index cannot go stale.  Manually built
-    trees (``doc_nodes is None``) fall back to an explicit-stack walk.
+    read-only over it), so the index cannot go stale.  Every ``Node``
+    comes from a tree builder, which sets ``doc_nodes``, ``i0`` and ``i1``.
     """
 
     __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1",
@@ -138,72 +138,21 @@ class Node:
         self.doc_nodes = None
         self.i0 = 0
         self.i1 = 0
-        # ancestor link for CSS combinator matching (kernels/css.py).
-        # Set by the parser; manually built trees may leave it None, in
-        # which case combinator rules simply never match (deterministic
-        # under-match, same contract as unsupported selectors).
+        # ancestor link for CSS combinator matching (kernels/css.py);
+        # None only on the #document root
         self.parent: Optional["Node"] = None
 
     # -- traversal -------------------------------------------------------
     def _subtree(self) -> list:
         """Pre-order node list including self (document order)."""
         dl = self.doc_nodes
-        if dl is not None:
-            if self.i0 == 0 and self.i1 == len(dl):
-                return dl
-            return dl[self.i0 : self.i1]
-        out: list = []
-        add = out.append
-        stack = [self]
-        pop = stack.pop
-        push = stack.append
-        while stack:
-            node = pop()
-            add(node)
-            children = node.children
-            for i in range(len(children) - 1, -1, -1):
-                c = children[i]
-                if type(c) is Node:
-                    push(c)
-        return out
+        if self.i0 == 0 and self.i1 == len(dl):
+            return dl
+        return dl[self.i0 : self.i1]
 
     def iter(self) -> Iterator["Node"]:
         """Pre-order traversal including self (document order)."""
         return iter(self._subtree())
-
-    def iter_rendered(self) -> Iterator["Node"]:
-        """Pre-order traversal that yields inert containers
-        (``<template>``/``<noscript>``) themselves but never DESCENDS
-        into them — a browser never renders their content, so their
-        markup must not feed the artifact collectors (tables, links,
-        charts, structured data).
-
-        Indexed trees use the prebuilt doc list with an index jump past
-        each inert subtree (the hot extraction walk instead inlines the
-        same skip as an integer guard over ``iter()`` — a generator
-        resume per node costs real throughput at corpus scale)."""
-        dl = self.doc_nodes
-        if dl is not None:
-            i = self.i0
-            i1 = self.i1
-            while i < i1:
-                node = dl[i]
-                yield node
-                i = node.i1 if node.tag in RENDER_INERT else i + 1
-            return
-        stack = [self]
-        pop = stack.pop
-        push = stack.append
-        while stack:
-            node = pop()
-            yield node
-            if node.tag in RENDER_INERT:
-                continue
-            children = node.children
-            for i in range(len(children) - 1, -1, -1):
-                c = children[i]
-                if type(c) is Node:
-                    push(c)
 
     def find_all(self, *tags: str) -> list:
         if len(tags) == 1:
@@ -214,46 +163,20 @@ class Node:
 
     def find_first(self, *tags: str):
         dl = self.doc_nodes
-        if dl is not None:
-            i1 = self.i1
-            if len(tags) == 1:
-                want_one = tags[0]
-                for i in range(self.i0, i1):
-                    n = dl[i]
-                    if n.tag == want_one:
-                        return n
-                return None
-            want = set(tags)
+        i1 = self.i1
+        if len(tags) == 1:
+            want_one = tags[0]
             for i in range(self.i0, i1):
                 n = dl[i]
-                if n.tag in want:
+                if n.tag == want_one:
                     return n
             return None
-        # unindexed tree: inline pre-order walk with early exit
         want = set(tags)
-        stack = [self]
-        pop = stack.pop
-        push = stack.append
-        while stack:
-            node = pop()
-            if node.tag in want:
-                return node
-            children = node.children
-            for i in range(len(children) - 1, -1, -1):
-                c = children[i]
-                if type(c) is Node:
-                    push(c)
+        for i in range(self.i0, i1):
+            n = dl[i]
+            if n.tag in want:
+                return n
         return None
-
-    def collect_tags(self, groups: dict) -> None:
-        """Single-pass collection: ``groups`` maps tag -> list; every node
-        whose tag is a key is appended to its list in document order.
-        One traversal replaces one ``find_all`` per artifact family."""
-        get = groups.get
-        for n in self._subtree():
-            bucket = get(n.tag)
-            if bucket is not None:
-                bucket.append(n)
 
     def element_children(self) -> list:
         return [c for c in self.children if type(c) is Node]
@@ -325,94 +248,10 @@ class Node:
         return f"<Node {self.tag} attrs={self.attrs} n_children={len(self.children)}>"
 
 
-class _TreeBuilder(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.root = Node("#document")
-        self.doc_nodes: list = [self.root]
-        self.root.doc_nodes = self.doc_nodes
-        self.stack: list = [self.root]
-
-    # helpers
-    def _top(self) -> Node:
-        return self.stack[-1]
-
-    def _close_from(self, i: int) -> None:
-        end = len(self.doc_nodes)
-        for closed in self.stack[i:]:
-            closed.i1 = end
-        del self.stack[i:]
-
-    def _new_node(self, tag: str, attrs) -> Node:
-        # attrs is usually empty: share one frozen-by-convention dict to
-        # cut per-element allocations (attrs are never mutated)
-        node = Node(tag, dict(attrs) if attrs else _NO_ATTRS)
-        node.doc_nodes = self.doc_nodes
-        i0 = len(self.doc_nodes)
-        node.i0 = i0
-        node.i1 = i0 + 1  # leaf until its scope closes
-        node.parent = self.stack[-1]
-        self.stack[-1].children.append(node)
-        self.doc_nodes.append(node)
-        return node
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        closers = _IMPLICIT_CLOSE.get(tag)
-        if closers:
-            # close open same-scope siblings (e.g. <li> before <li>)
-            for i in range(len(self.stack) - 1, 0, -1):
-                t = self.stack[i].tag
-                if t in closers:
-                    self._close_from(i)
-                    break
-                if t in _SCOPE_STOP:
-                    break
-        node = self._new_node(tag, attrs)
-        if tag not in VOID_ELEMENTS:
-            self.stack.append(node)
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        self._new_node(tag, attrs)
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in VOID_ELEMENTS:
-            return
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                self._close_from(i)
-                return
-        # stray end tag: ignore (tolerant parse)
-
-    def handle_data(self, data: str) -> None:
-        if data:
-            self._top().children.append(data)
-
-    def finalize(self) -> None:
-        end = len(self.doc_nodes)
-        for open_node in self.stack:  # includes root: i0=0, i1=total
-            open_node.i1 = end
-
-
-def parse_html_stdlib(html: str) -> Node:
-    """stdlib ``html.parser`` tree build — the tolerant fallback path."""
-    builder = _TreeBuilder()
-    try:
-        builder.feed(html)
-        builder.close()
-    except Exception:
-        # html.parser is already tolerant; belt-and-braces for exotic input
-        pass
-    builder.finalize()
-    return builder.root
-
-
-# -- fast regex-batch parser -------------------------------------------------
-# The stdlib parser walks the input char-by-char in Python (goahead +
-# updatepos bookkeeping) and dominates per-document cost (~50% measured).
-# This tokenizer matches whole tags/text-runs per regex step (~4x faster
-# tokenization) and feeds the same tree rules: lowercased tag/attr names,
-# entity decoding, void elements, implicit closes, raw-text script/style.
-# Any exception falls back to the stdlib builder (deterministic per input).
+# -- regex-batch parser ------------------------------------------------------
+# Matches whole tags per regex step (text runs are the gaps between them)
+# and applies the tree rules: lowercased tag/attr names, entity decoding,
+# void elements, implicit closes, raw-text script/style.
 
 _TOKEN_RE = re.compile(
     # TAG tokens only — text runs are the GAPS between matches, emitted
@@ -566,7 +405,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
             elif is_void:
                 continue
             if is_raw:
-                # raw text until the matching close tag (html.parser CDATA
+                # raw text until the matching close tag (HTML raw-text
                 # semantics: no entity decoding, no nested tags)
                 mclose = _RAW_CLOSE_RE[tag].search(html, pos)
                 if mclose is None:
@@ -662,14 +501,11 @@ _build_tree = _native_build or _parse_html_fast
 
 
 def parse_html(html: str, xml_mode: bool = False) -> Node:
-    """Parse an HTML string into a ``Node`` tree.  Never raises on
-    malformed markup; truly unparseable input yields an (almost) empty
-    ``#document`` the caller treats as the fallback path.  ``xml_mode``
-    applies XML self-closing/void semantics (the feed route)."""
-    try:
-        return _build_tree(html, xml_mode)
-    except Exception:
-        return parse_html_stdlib(html)
+    """Parse an HTML string into an indexed ``Node`` tree.  Malformed
+    markup never raises; a builder error does, and the caller records
+    it as a fallback.  ``xml_mode`` applies XML self-closing/void
+    semantics (the feed route)."""
+    return _build_tree(html, xml_mode)
 
 
 def decode_html_bytes(raw: bytes) -> str:

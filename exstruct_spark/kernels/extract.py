@@ -407,6 +407,32 @@ def _links_map(anchors: list, base_url: str = "", absolutize: bool = False,
     return positions
 
 
+def _result(url: str, status: str, fallback_reason: str, main_text: str,
+            extraction: dict, bytes_in: int, n_tables: int = 0,
+            n_shapes: int = 0, n_arrows: int = 0, n_charts: int = 0,
+            n_lists: int = 0, n_links: int = 0,
+            truncated: bool = False) -> dict:
+    """The flat result record of ``extract_document`` (every route)."""
+    extraction_json = canonical_json(extraction)
+    return {
+        "url": url,
+        "status": status,
+        "fallback_reason": fallback_reason,
+        "main_text": main_text,
+        "extraction_json": extraction_json,
+        "text_sha256": sha256_hex(main_text),
+        "json_sha256": sha256_hex(extraction_json),
+        "n_tables": n_tables,
+        "n_shapes": n_shapes,
+        "n_arrows": n_arrows,
+        "n_charts": n_charts,
+        "n_lists": n_lists,
+        "n_links": n_links,
+        "bytes_in": bytes_in,
+        "truncated": truncated,
+    }
+
+
 def extract_document(
     url: str, html_bytes: Optional[bytes], opts: ExtractOptions = _DEFAULT_OPTS,
     external_css=None,
@@ -457,20 +483,8 @@ def extract_document(
             status = "fallback"
             fallback_reason = f"pdf:{type(exc).__name__}"
             extraction["fallback_reason"] = fallback_reason
-        extraction_json = canonical_json(extraction)
-        return {
-            "url": url,
-            "status": status,
-            "fallback_reason": fallback_reason,
-            "main_text": main_text,
-            "extraction_json": extraction_json,
-            "text_sha256": sha256_hex(main_text),
-            "json_sha256": sha256_hex(extraction_json),
-            "n_tables": 0, "n_shapes": 0, "n_arrows": 0,
-            "n_charts": 0, "n_lists": 0, "n_links": 0,
-            "bytes_in": bytes_in,
-            "truncated": False,
-        }
+        return _result(url, status, fallback_reason, main_text, extraction,
+                       bytes_in)
 
     html = decode_html_bytes(raw)
 
@@ -497,20 +511,8 @@ def extract_document(
             status = "fallback"
             fallback_reason = f"feed:{type(exc).__name__}"
             extraction["fallback_reason"] = fallback_reason
-        extraction_json = canonical_json(extraction)
-        return {
-            "url": url,
-            "status": status,
-            "fallback_reason": fallback_reason,
-            "main_text": main_text,
-            "extraction_json": extraction_json,
-            "text_sha256": sha256_hex(main_text),
-            "json_sha256": sha256_hex(extraction_json),
-            "n_tables": 0, "n_shapes": 0, "n_arrows": 0,
-            "n_charts": 0, "n_lists": n_lists, "n_links": 0,
-            "bytes_in": bytes_in,
-            "truncated": False,
-        }
+        return _result(url, status, fallback_reason, main_text, extraction,
+                       bytes_in, n_lists=n_lists)
 
     if not html.strip():
         status = "fallback"
@@ -1014,21 +1016,6 @@ def extract_document(
 
     # NFC-normalize so byte identity is well-defined across sources
     main_text = normalize_main_text(main_text)
-    extraction_json = canonical_json(extraction)
-    return {
-        "url": url,
-        "status": status,
-        "fallback_reason": fallback_reason,
-        "main_text": main_text,
-        "extraction_json": extraction_json,
-        "text_sha256": sha256_hex(main_text),
-        "json_sha256": sha256_hex(extraction_json),
-        "n_tables": n_tables,
-        "n_shapes": n_shapes,
-        "n_arrows": n_arrows,
-        "n_charts": n_charts,
-        "n_lists": n_lists,
-        "n_links": n_links,
-        "bytes_in": bytes_in,
-        "truncated": truncated,
-    }
+    return _result(url, status, fallback_reason, main_text, extraction,
+                   bytes_in, n_tables, n_shapes, n_arrows, n_charts, n_lists,
+                   n_links, truncated)

@@ -343,6 +343,57 @@ def test_extract_document_ok_and_fallback():
     assert json.loads(empty["extraction_json"])["fallback_reason"] == "empty_document"
 
 
+def test_tree_builder_error_is_a_recorded_fallback(monkeypatch):
+    """A tree-builder exception is not hidden behind another parser: the
+    document falls back to the text-only path with the exception type as
+    its reason (``feed:<type>`` on the feed route), and its batch
+    neighbours extract exactly as they would alone."""
+    import pandas as pd
+
+    from exstruct_spark import golden
+    from exstruct_spark.kernels import dom
+
+    marker = "builder-trips-here"
+    page = (f"<html><body><p>Fallback page {marker} &amp; text.</p>"
+            "<table><tr><td>1</td></tr></table></body></html>")
+    feed = ("<?xml version='1.0'?><rss version='2.0'><channel>"
+            f"<title>{marker}</title><item><title>a</title>"
+            "<link>https://x/a</link></item></channel></rss>")
+    neighbour = ("<html><body><main><p>A neighbour paragraph that is long "
+                 "enough to count as content.</p></main></body></html>")
+    frame = pd.DataFrame({
+        "url": ["https://x/page", "https://x/feed", "https://x/n"],
+        "html": [page.encode(), feed.encode(), neighbour.encode()],
+    })
+    before = golden.extract_pdf(frame)
+
+    real_build = dom._build_tree
+
+    def tripping_build(html, xml_mode=False):
+        if marker in html:
+            raise RuntimeError("boom")
+        return real_build(html, xml_mode)
+
+    monkeypatch.setattr(dom, "_build_tree", tripping_build)
+    after = golden.extract_pdf(frame)
+
+    rec = after.iloc[0]
+    assert before.iloc[0]["status"] == "ok"
+    assert rec["status"] == "fallback"
+    assert rec["fallback_reason"] == "RuntimeError"
+    assert rec["main_text"] == strip_tags_text(page)
+    assert json.loads(rec["extraction_json"]) == {
+        "doc": "https://x/page", "fallback_reason": "RuntimeError"}
+
+    rec = after.iloc[1]
+    assert before.iloc[1]["status"] == "ok"
+    assert rec["status"] == "fallback"
+    assert rec["fallback_reason"] == "feed:RuntimeError"
+
+    assert after.iloc[2].to_dict() == before.iloc[2].to_dict()
+    assert after.iloc[2]["status"] == "ok"
+
+
 def test_extract_document_deterministic():
     page = "<html><body><p>stable content for hashing goes here ok.</p></body></html>".encode()
     a = extract_document("u", page)

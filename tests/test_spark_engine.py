@@ -595,7 +595,7 @@ def test_external_css_corpus_join(spark):
     """VERDICT r6 #2 done-criterion: a page whose border/fill signal
     exists ONLY in a separate CSS document in the corpus extracts
     identically to its inline twin, via harvest -> equi-join ->
-    extract_stage(use_external_css=True).  Plan audited: one broadcast
+    extract_stage.  Plan audited: one broadcast
     hash join on the css side, no cartesian product."""
     import json
 
@@ -638,7 +638,7 @@ def test_external_css_corpus_join(spark):
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
     with_css = attach_external_css(pages)
-    out = extract_stage(with_css, use_external_css=True)
+    out = extract_stage(with_css)
     recs = {r["url"]: r for r in out.collect()}
 
     ex_page = json.loads(recs["https://site.example/page"]["extraction_json"])
@@ -680,7 +680,7 @@ def test_external_css_corpus_join(spark):
              ("http://s.example/base.css", base)]
     pages2 = spark.createDataFrame(rows2, "url string, html binary")
     rec2 = {r["url"]: r for r in extract_stage(
-        attach_external_css(pages2), use_external_css=True).collect()}
+        attach_external_css(pages2)).collect()}
     ex2 = json.loads(rec2["http://s.example/page"]["extraction_json"])
     assert ex2["tables"][0]["colors_map"] == {
         "222222": [[1, 0], [1, 1]], "EEEEFF": [[2, 0], [2, 1]]}
@@ -729,8 +729,7 @@ def test_external_css_media_authority(spark):
         ("https://c.example/d.css", good_css),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     recs = {r["url"]: json.loads(r["extraction_json"])
             for r in out.collect() if r["url"].startswith("https://")
             and not r["url"].endswith(".css")}
@@ -770,8 +769,7 @@ def test_harvest_ignores_commented_base(spark):
          b"td { background-color: #00FF00 }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     rec = {r["url"]: r for r in out.collect()}[
         "https://site.example/a/page"]
     ex = json.loads(rec["extraction_json"])
@@ -816,8 +814,7 @@ def test_harvest_base_candidates_cover_dom_divergence(spark):
          b"td { background-color: #0000FF }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     recs = {r["url"]: json.loads(r["extraction_json"])
             for r in out.collect()}
     a = recs["https://u.example/a/page"]
@@ -861,8 +858,7 @@ def test_harvest_entity_decode_and_script_base(spark):
          b"td { background-color: #0000FF }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     recs = {r["url"]: json.loads(r["extraction_json"])
             for r in out.collect()}
     a = recs["https://e.example/p"]
@@ -918,8 +914,7 @@ def test_harvest_attr_parity_with_kernel(spark):
          b"td { background-color: #FF8800 }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     recs = {r["url"]: json.loads(r["extraction_json"])
             for r in out.collect()}
     assert recs["https://g.example/p"]["tables"][0]["colors_map"] == {
@@ -956,8 +951,7 @@ def test_inline_style_import_corpus_join(spark):
          b"td { background-color: #123456 }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     rec = {r["url"]: r for r in out.collect()}["https://j.example/p"]
     ex = json.loads(rec["extraction_json"])
     assert ex["stylesheets"] == ["https://j.example/theme.css"]
